@@ -1,9 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.MiniJson.quote
+import graft.util.Timing.{noopReps, noopRun}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // MEDIAN-OF-N protocol (default 3): each query runs N times
     // back-to-back and reports its per-query MEDIAN, so (a) one-time
     // JIT/codegen cost lands in rep 1 and is discounted, and (b) the
@@ -11,89 +12,51 @@ object Bench {
     // cherry-picked best-of runs. Spread (max-min, seconds) is emitted
     // per query so noisy medians are visible.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // local-mode knob: sf0.1 parquet files are 2-20 MB, far below the
-      // 128 MB default split size — without this every scan is one task
-      // and 31 of 32 cores idle on the map side. A real cluster with
-      // full-size files keeps the default.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // shuffle/spill scratch on tmpfs when the host has one (guide §6):
-      // local-mode shuffle files are ephemeral by definition; a cluster
-      // deployment keeps the default (fast local disks sized for spill).
-      // SPARK_GRAFT_LOCAL_DIR overrides; no /dev/shm → Spark's default.
-      .config("spark.local.dir", graft.util.TempDirs.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cores, "graft-bench")
+    def warmup(what: String)(body: => Unit): Unit =
+      try body catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] warm-up $what failed: $e")
+      }
     // untimed warmup: JVM/codegen/parquet-footer caches, so rep 1 of the
     // first measured query isn't charged session bring-up. One
     // representative per machinery family — plain scan/join (q1), kernel
     // expressions (x6), the producer/executor/backend path (q13: snapshot
     // + staged write + publish), a micro-batch streaming query (qs3), and
     // the shingle/near-dup machinery (x17).
-    try {
-      for (w <- Seq("q1_pricing_summary", "x6_ann_bruteforce",
-                    "q13_partitioned_spend", "qs3_stream_state",
-                    "x17_dedup_clusters"))
-        SparkEntry.queries.get(w).foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => () }
+    for (w <- Seq("q1_pricing_summary", "x6_ann_bruteforce",
+                  "q13_partitioned_spend", "qs3_stream_state",
+                  "x17_dedup_clusters"))
+      SparkEntry.queries.get(w).foreach(fn => warmup(w)(fn(spark, sfDir).count()))
     // streaming instrument pin (r12): materialize every stream-source wave
     // dir and warm the state-store/sink machinery ONCE, so no timed qs rep
     // pays another query's source build — the source of the up-to-4.7 s
     // qs spreads that forced window triage in earlier rounds.
-    try graft.streaming.StreamQueries.prewarmStreaming(spark, sfDir)
-    catch { case _: Throwable => () }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      spark.catalog.clearCache() // previous rep's persist() outside the timer
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      val t0 = System.nanoTime()
-      // FULL-MATERIALIZATION action (r9 instrument fix): count() lets the
-      // optimizer's distinct-key join elimination DROP whole pipeline legs
-      // — x141's entire span machinery vanished under count (its final
-      // frame left-joins per-doc aggregates whose keys Catalyst proves
-      // unique), timing a 280 MB scan instead of a 30 GB hash pass. The
-      // noop sink computes EVERY output column, exactly what the DuckDB
-      // oracle's fetch pays — symmetric, and un-prunable by construction.
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // dev-only subset knob for targeted perf work (the driver never sets
-    // it): SPARK_GRAFT_BENCH_QUERIES=x93_prefix_join,x2_neardup_pairs
-    val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names.filterNot(SparkEntry.queries.contains)
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_QUERIES names no registered query: ${unknown.mkString(",")}")
-        SparkEntry.queries.toSeq.filter(q => names(q._1))
-      case None => SparkEntry.queries.toSeq
-    }
-    require(selected.nonEmpty, "no queries selected — empty bench would be silent")
+    warmup("streaming sources")(graft.streaming.StreamQueries.prewarmStreaming(spark, sfDir))
     // qs queries get median-of-5 minimum (r12): micro-batch scheduling +
     // state-store init jitter gives streaming reps wider spreads than
     // batch reps at the same cost class, and 3 samples let one bad rep
     // become the median. Batch queries keep the configured rep count.
-    val results: Seq[(String, Double, Double)] = selected.map { case (name, fn) =>
-      val qReps = if (name.startsWith("qs")) math.max(reps, 5) else reps
-      // qs queries: one UNTIMED warmup rep (the probe discipline) — each
-      // streaming query JITs its own generated code + state-store setup on
-      // first execution, which median-of-N discounts but the spread metric
-      // showed as multi-second "jitter" that wasn't (r11 What's-wrong #5)
-      if (name.startsWith("qs")) { try once(fn) catch { case _: Throwable => () } }
-      val times = (1 to qReps).map(_ => once(fn)).sorted
-      val median = times(times.size / 2)
-      (name, median, times.last - times.head)
-    }
+    // A query that throws records no time: it is reported as -1, counted
+    // in n_failed and left out of the total.
+    val results: Seq[(String, Option[(Double, Double)])] =
+      SparkEntry.queries.toSeq.map { case (name, fn) =>
+        val qReps = if (name.startsWith("qs")) math.max(reps, 5) else reps
+        // qs queries: one UNTIMED warmup rep (the probe discipline) — each
+        // streaming query JITs its own generated code + state-store setup on
+        // first execution, which median-of-N discounts but the spread metric
+        // showed as multi-second "jitter" that wasn't (r11 What's-wrong #5)
+        if (name.startsWith("qs")) warmup(name)(noopRun(spark)(fn(spark, sfDir)).get)
+        name -> noopReps(spark, qReps)(fn(spark, sfDir)).fold(
+          e => { System.err.println(s"[bench] $name failed: $e"); None },
+          times => Some((times(times.size / 2), times.last - times.head)))
+      }
     def jnum(d: Double): String = f"$d%.4f"
-    val qs = results.map { case (k, m, _) => "\"" + k + "\":" + jnum(m) }.mkString("{", ",", "}")
-    val spread = results.map { case (k, _, s) => "\"" + k + "\":" + jnum(s) }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    def jmap(f: ((Double, Double)) => Double): String = results.map { case (k, r) =>
+      quote(k) + ":" + r.fold("-1")(v => jnum(f(v)))
+    }.mkString("{", ",", "}")
+    val medians = results.collect { case (k, Some((m, _))) => k -> m }
+    val total = medians.map(_._2).sum
+    val nFailed = results.size - medians.size
     spark.stop() // engine loop done; the oracle pair (below) must not share the window with a live JVM doing work
     // SELF-PAIRING (r11): raw totals drift 1.4-2x between host windows
     // (r10's unpaired driver artifact read x123 at 77 s where the
@@ -108,27 +71,9 @@ object Bench {
     val pairBlock: String =
       if (!sys.env.get("SPARK_GRAFT_BENCH_PAIR").contains("1")) ""
       else try {
-        val repoRoot = {
-          val cwd = java.nio.file.Paths.get("").toAbsolutePath
-          Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
-            .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-            .getOrElse(cwd)
-        }
-        // same escaping contract as Verify.scala's oracle_sql.json dump
-        def jstr(s: String): String = "\"" + s.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
-        val names = selected.map(_._1).toSet
-        val oracleSql = SparkEntry.oracleSql.filter(kv => names(kv._1))
         val tmp = java.nio.file.Files.createTempFile("graft_oracle_", ".json")
-        java.nio.file.Files.writeString(tmp,
-          oracleSql.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}"))
+        java.nio.file.Files.writeString(tmp, SparkEntry.oracleSql
+          .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}"))
         val cmd = Seq("python3", repoRoot.resolve("tools/duck_bench.py").toString,
           sfDir, tmp.toString, reps.toString)
         val oracleOut = scala.sys.process.Process(cmd).!!
@@ -139,18 +84,19 @@ object Bench {
         // the pair ratio is computed over the BATCH common set: streaming
         // (qs*) engine legs time micro-batch drains, which the batch SQL
         // oracle does not model — same exclusion every recorded pair used
-        val common = results.filter { case (n, _, _) => !n.startsWith("qs") && oracleT.contains(n) }
+        val common = medians.filter { case (n, _) => !n.startsWith("qs") && oracleT.contains(n) }
         val eng = common.map(_._2).sum
-        val ora = common.map { case (n, _, _) => oracleT(n) }.sum
-        val wins = common.count { case (n, m, _) => m < oracleT(n) }
+        val ora = common.map { case (n, _) => oracleT(n) }.sum
+        val wins = common.count { case (n, m) => m < oracleT(n) }
         val oq = oracleT.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
+          .map { case (k, v) => quote(k) + ":" + jnum(v) }.mkString("{", ",", "}")
         pairRatio = Some(eng / ora)
         s""","pair":{"oracle_total_s":${jnum(oracleT.values.sum)},"batch_common":${common.size},"engine_common_s":${jnum(eng)},"oracle_common_s":${jnum(ora)},"pair_ratio":${jnum(eng / ora)},"engine_wins":$wins,"oracle_queries":$oq}"""
-      } catch { case e: Throwable =>
-        s""","pair_error":${"\"" + e.toString.take(200).replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""}"""
+      } catch { case e: Exception =>
+        s""","pair_error":${quote(e.toString.take(200))}"""
       }
-    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"median_of_${reps}_qs_${math.max(reps, 5)}","queries":$qs,"spread":$spread$pairBlock,"sf":"$sfDir"}"""
+    val head = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"median_of_${reps}_qs_${math.max(reps, 5)}""""
+    val line = s"""$head,"n_failed":$nFailed,"queries":${jmap(_._1)},"spread":${jmap(_._2)}$pairBlock,"sf":${quote(sfDir)}}"""
     println(line)
     // the full per-query map also lands in a FILE: stdout capture truncated
     // the round-4 artifact to 69/104 queries, and the file is what keeps
@@ -158,29 +104,28 @@ object Bench {
     // Default path is anchored to the repo root (where build.sbt lives) so
     // a JVM launched from elsewhere doesn't scatter artifacts; the file is
     // gitignored — round closes copy it to BENCH_LOCAL_r{N}.json.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      val cwd = java.nio.file.Paths.get("").toAbsolutePath
-      val root = Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
-        .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-        .getOrElse(cwd)
-      root.resolve("BENCH_LOCAL.json").toString
-    })
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      repoRoot.resolve("BENCH_LOCAL.json").toString)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // MEASUREMENT-REPORTING FIX (r13, verdict item 1): the full line above
     // is ~15 KB for 269 queries, and the driver's artifact keeps only a
-    // 2000-char stdout TAIL — so its JSON parse has failed (parsed:null)
-    // every round since r08, leaving PERF blind. The FINAL stdout line is
-    // therefore a SHORT summary that always fits the tail whole: same
-    // metric/value/unit contract, counts, the pair ratio when measured,
-    // and a pointer to the artifact file that carries the per-query maps
-    // (which this main has always written). The full line still prints
-    // first and still lands in the file — no number is dropped or changed;
-    // only the FINAL line's payload moved from per-query maps to a pointer.
+    // 2000-char stdout TAIL — so the FINAL stdout line is a SHORT summary
+    // that always fits the tail whole: same metric/value/unit contract,
+    // counts, the pair ratio when measured, and a pointer to the artifact
+    // file that carries the per-query maps.
     val shortLine =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"median_of_${reps}_qs_${math.max(reps, 5)}","n_queries":${results.size}""" +
+      s"""$head,"n_queries":${results.size},"n_failed":$nFailed""" +
       pairRatio.map(r => s""","pair_ratio":${jnum(r)}""").getOrElse("") +
-      s""","queries_file":"$out","sf":"$sfDir"}"""
+      s""","queries_file":${quote(out)},"sf":${quote(sfDir)}}"""
     println(shortLine)
+  }
+
+  /** The checkout root (where build.sbt lives), else the working directory. */
+  private def repoRoot: java.nio.file.Path = {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
+      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
+      .getOrElse(cwd)
   }
 }

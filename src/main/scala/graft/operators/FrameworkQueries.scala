@@ -549,46 +549,13 @@ object FrameworkQueries {
         else Right(())
       })
     val serveP = Producer("serve_topk", build = (_, ins) => {
-      val (emb, cb, cds) = (ins(0), ins(1), ins(2))
       // one quantize+explode pass over the vector artifact: the query
       // side, the ADC LUT, and the re-rank all derive from this persisted
       // frame instead of re-reading/re-deriving the artifact three times
-      val vsubs = Queries.pqSubspaces(emb)
+      val vsubs = Queries.pqSubspaces(ins(0))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       pinned += vsubs
-      val qsubs = vsubs.filter(col("vec_id") < 10)
-        .withColumnRenamed("vec_id", "qid")
-      val lut = qsubs
-        .join(broadcast(cb), "s")
-        .withColumn("d", Queries.pqDist2)
-        .select(col("qid"), col("s"), col("c"), col("d"))
-      val melted = cds.select(col("vec_id"), posexplode(array(
-        (0 until 8).map(s => col(s"c$s")): _*)).as(Seq("s", "c")))
-      val wAdc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("adc_micro2").asc, col("vec_id").asc)
-      // stage 1: codes-only ADC scan → top-64 shortlist per query
-      val shortlist = melted.join(broadcast(lut), Seq("s", "c"))
-        .groupBy(col("qid"), col("vec_id"))
-        .agg(sum(col("d")).as("adc_micro2"))
-        .withColumn("rn", row_number().over(wAdc))
-        .filter(col("rn") <= 64)
-        .select(col("qid"), col("vec_id"), col("adc_micro2"))
-      // stage 2: exact quantized L2 over the shortlist only (≤ 64/query)
-      val wEx = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("exact_micro2").asc, col("vec_id").asc)
-      Seq(vsubs
-        .join(broadcast(shortlist), "vec_id")
-        .join(broadcast(qsubs.select(col("qid"), col("s"), col("sub").as("qsub"))),
-          Seq("qid", "s"))
-        .withColumn("d2", expr(
-          "aggregate(zip_with(sub, qsub, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
-        .groupBy(col("qid"), col("vec_id"), col("adc_micro2"))
-        .agg(sum(col("d2")).as("exact_micro2"))
-        .withColumn("rnk", row_number().over(wEx))
-        .filter(col("rnk") <= 3)
-        .select(col("qid"), col("rnk").cast(IntegerType).as("rnk"),
-          col("vec_id"), col("adc_micro2"), col("exact_micro2"))
-        .coalesce(1))
+      Seq(Queries.pqServe(vsubs, ins(1), ins(2)).coalesce(1))
     })
 
     val g = new Graph("pq_index")

@@ -60,7 +60,7 @@ private[operators] trait QueriesAnn { this: Queries.type =>
     * per query, rank the corpus by popcount Hamming distance of the packed
     * signatures and keep the top ⌈n/4⌉. Stage 2 exact-re-ranks candidates
     * with float cosine and emits the top-10 — the x29 two-stage recipe
-    * with hyperplane bits as the coarse code (recall ≥ 0.9 on the EqCheck
+    * with hyperplane bits as the coarse code (recall ≥ 0.9 on the `Dev eq`
     * harness vs 0.40 for the old bucketed 12×6-bit tables: at this
     * corpus's neighbor similarity ~0.3, bucket collision probability
     * p^6 ≈ 0.05 caps bucketed recall; Hamming ranking uses ALL 192 bits
@@ -170,7 +170,7 @@ private[operators] trait QueriesAnn { this: Queries.type =>
     * probe-4-of-16-lists variant peaked at 0.54 recall because on this
     * corpus — neighbor cosine ~0.3 — centroid ROUTING carries almost no
     * signal; centroid+residual RECONSTRUCTION is nearly lossless and
-    * EqCheck recall is 1.00 at an n/8 re-rank).
+    * `Dev eq` recall is 1.00 at an n/8 re-rank).
     * Stage 1 (asymmetric distance): the only corpus-wide pass reads
     * ~80-byte codes (cent_id + int8[64] + scale + norm) instead of
     * 512-byte floats; approx_sim = (dot(q, centroid) + dot(q, residual̂))
@@ -1454,6 +1454,44 @@ private[operators] trait QueriesAnn { this: Queries.type =>
       .select(col("vec_id") +:
         (0 until 8).map(s => col(s"m$s.c").as(s"c$s")) :+
         (0 until 8).map(s => col(s"m$s.d2")).reduce(_ + _).as("err_micro2"): _*)
+  }
+
+  /** x112's two-stage serve for the 10 query vectors (vec_id < 10) from
+    * the quantized vectors `vsubs` ([[pqSubspaces]]), a codebook and the
+    * codes: a codes-only ADC scan keeps a top-64 shortlist per query
+    * (stage 1), then exact quantized L2 over the shortlist only re-ranks
+    * it to the top 3 (stage 2). The ≤64/query shortlist and the per-query
+    * subvectors broadcast; `vsubs` is read three times, so callers pass a
+    * persisted frame. */
+  private[graft] def pqServe(vsubs: DataFrame, cb: DataFrame, codes: DataFrame): DataFrame = {
+    val qsubs = vsubs.filter(col("vec_id") < 10)
+      .withColumnRenamed("vec_id", "qid")
+    val lut = qsubs
+      .join(broadcast(cb), "s")
+      .withColumn("d", pqDist2)
+      .select(col("qid"), col("s"), col("c"), col("d"))
+    val melted = codes.select(col("vec_id"), posexplode(array(
+      (0 until 8).map(s => col(s"c$s")): _*)).as(Seq("s", "c")))
+    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc_micro2").asc, col("vec_id").asc)
+    val shortlist = melted.join(broadcast(lut), Seq("s", "c"))
+      .groupBy(col("qid"), col("vec_id"))
+      .agg(sum(col("d")).as("adc_micro2"))
+      .withColumn("rn", row_number().over(wAdc))
+      .filter(col("rn") <= 64)
+      .select(col("qid"), col("vec_id"), col("adc_micro2"))
+    val wEx = Window.partitionBy(col("qid")).orderBy(col("exact_micro2").asc, col("vec_id").asc)
+    vsubs
+      .join(broadcast(shortlist), "vec_id")
+      .join(broadcast(qsubs.select(col("qid"), col("s"), col("sub").as("qsub"))),
+        Seq("qid", "s"))
+      .withColumn("d2", expr(
+        "aggregate(zip_with(sub, qsub, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"))
+      .groupBy(col("qid"), col("vec_id"), col("adc_micro2"))
+      .agg(sum(col("d2")).as("exact_micro2"))
+      .withColumn("rnk", row_number().over(wEx))
+      .filter(col("rnk") <= 3)
+      .select(col("qid"), col("rnk").cast(IntegerType).as("rnk"),
+        col("vec_id"), col("adc_micro2"), col("exact_micro2"))
   }
 
   private[operators] def x102(spark: SparkSession, dir: String): DataFrame = {

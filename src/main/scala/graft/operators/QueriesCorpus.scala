@@ -2329,7 +2329,7 @@ private[operators] trait QueriesCorpus { this: Queries.type =>
     * ≤ |items|² rows and each MM round is two keyed joins + one keyed
     * aggregation on it (θ is |items| rows); the normalizer is a 1-row
     * broadcast scalar attach. 4 rounds = 4 such stages, plan depth fixed. */
-  /** x123's corpus-scale leg, factored for `ScaleProbes x123_{matrix,mm}`
+  /** x123's corpus-scale leg, factored for `Dev probe x123_{matrix,mm}`
     * (r12): the order-keyed shuffle-hash self-join (per-key fan-out ≤
     * lines², the x92 wedge bound) explodes each comparison into BOTH
     * orientations and collapses map-side into the directed+symmetric
@@ -2404,8 +2404,6 @@ private[operators] trait QueriesCorpus { this: Queries.type =>
     // executor loss. Either way, round N−1's leaf blocks are RELEASED as
     // soon as round N materializes (r12 ADVICE: the checkpointed rounds
     // otherwise accumulate for the life of the session).
-    val reliableCut = spark.conf.getOption("spark.graft.reliableLineageCut")
-      .exists(_.toBoolean)
     var releasePrevRound: () => Unit = () => ()
     def mmRound(theta: DataFrame): DataFrame = {
       val denom = sym
@@ -2426,25 +2424,10 @@ private[operators] trait QueriesCorpus { this: Queries.type =>
           """greatest(CAST((2 * thp * kk * 1000000 + ssum)
             |  div (2 * ssum) AS BIGINT), 1L)""".stripMargin).as("th"))
       // materialize the leaf (O(items) rows), then free the PREVIOUS
-      // round's leaf — it was only ever read to build this one. The new
-      // leaf's persisted RDD ids are found by set diff (single-threaded
-      // here; localCheckpoint registers its block-backing RDD the same
-      // way an explicit persist does), because a checkpointed Dataset's
-      // unpersist() is a CacheManager no-op.
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out =
-        if (!reliableCut) outPlan.localCheckpoint(true)
-        else {
-          val rdd = outPlan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          val df = spark.createDataFrame(rdd, outPlan.schema)
-          df.count() // eager, matching the checkpoint path
-          df
-        }
-      val mine = sc.getPersistentRDDs.keySet -- before
+      // round's leaf — it was only ever read to build this one
+      val (out, release) = lineageLeaf(outPlan, eager = true)
       releasePrevRound()
-      releasePrevRound =
-        () => mine.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      releasePrevRound = release
       out
     }
     val t0 = items2.withColumn("th", lit(1000000L))

@@ -342,9 +342,6 @@ private[operators] trait QueriesDedup { this: Queries.type =>
     * gate and rationale as x123's solver. Returns (labels, rounds). */
   private[graft] def minLabelComponents(edges0: DataFrame): (DataFrame, Int) = {
     val spark = edges0.sparkSession
-    val reliableCut = spark.conf.getOption("spark.graft.reliableLineageCut")
-      .exists(_.toBoolean)
-    val sc = spark.sparkContext
     val edges = edges0.toDF("src", "dst").persist()
     // round 0 fused into initialization: label = min(self, direct neighbors)
     val labels0 = edges.groupBy(col("src"))
@@ -368,24 +365,15 @@ private[operators] trait QueriesDedup { this: Queries.type =>
         least(col("lbl"),
           coalesce(col("nlbl"), col("lbl")),
           coalesce(col("jlbl"), col("lbl"))).as("lbl2"))
-      // lineage cut: persist the round's ROWS, then re-enter SQL through a
-      // leaf LogicalRDD — the next round's plan starts here, not at round 0.
-      // The new leaf's persisted RDD ids are found by set diff (single-
-      // threaded here) because a checkpointed Dataset's unpersist() is a
-      // CacheManager no-op.
-      val before = sc.getPersistentRDDs.keySet
-      val merged =
-        if (reliableCut) spark.createDataFrame(
-          mergedPlan.rdd.persist(StorageLevel.MEMORY_AND_DISK), mergedPlan.schema)
-        else mergedPlan.localCheckpoint(false) // lazy: the count below materializes it
-      val mine = sc.getPersistentRDDs.keySet -- before
+      // lineage cut: the next round's plan starts at this round's rows,
+      // not at round 0 (lazy: the count below materializes the leaf)
+      val (merged, release) = lineageLeaf(mergedPlan, eager = false)
       // full count, deliberately: it materializes EVERY partition of the
       // round's leaf AND is the convergence scalar (labels are monotone
       // decreasing, so zero strict drops ⇔ fixpoint — no extra round)
       changed = merged.filter(col("lbl2") < col("lbl")).count() > 0
       releasePrev()
-      releasePrev =
-        () => mine.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      releasePrev = release
       labels = merged.select(col("src"), col("lbl2").as("lbl"))
       rounds += 1
       if (sys.env.contains("GRAFT_TIMING"))

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, RuntimeConfig, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -122,7 +123,7 @@ private[operators] trait QueriesShared { this: Queries.type =>
     * every consumer (Verify's parquet dump, Bench's noop sink, a
     * production write) was about to pay anyway — the only extra work is
     * a block re-read (A/B-priced per converted query, BASELINE.md r11:
-    * the ScaleProbes `eagerfinish_ab` probe).
+    * `Dev ab` on spark.graft.eagerFinish.enabled).
     *
     * FAULT-TOLERANCE TRADE-OFF (r10 ADVICE, medium): localCheckpoint
     * blocks are executor-local, NON-replicated and NON-recomputable —
@@ -137,13 +138,47 @@ private[operators] trait QueriesShared { this: Queries.type =>
     * for the corpus-scale conversions (x141, x108) that peak is the
     * price of not leaking the pins to composers. */
   private[graft] def eagerFinish(out: DataFrame, pinned: DataFrame*): DataFrame = {
-    val enabled = out.sparkSession.conf
-      .getOption("spark.graft.eagerFinish.enabled").forall(_.toBoolean)
+    val enabled = confFlag(out.sparkSession.conf, "spark.graft.eagerFinish.enabled", default = true)
     if (!enabled) out // A/B + dynamic-allocation escape hatch: r9 lifecycle (pins stay until clearCache)
     else {
       val done = out.localCheckpoint(true)
       pinned.foreach(_.unpersist(blocking = false))
       done
+    }
+  }
+
+  /** A boolean `spark.graft.*` flag: true/false, on/off or 1/0 in any
+    * case; any other value fails, naming the key. */
+  private[graft] def confFlag(conf: RuntimeConfig, key: String, default: Boolean): Boolean =
+    conf.getOption(key).fold(default)(_.trim.toLowerCase(java.util.Locale.ROOT) match {
+      case "true" | "on" | "1" => true
+      case "false" | "off" | "0" => false
+      case v => throw new IllegalArgumentException(
+        s"$key must be true/false, on/off or 1/0, got '$v'")
+    })
+
+  /** THE LINEAGE-CUT LEAF of the iterative kernels (x17/x77/x130's
+    * components, x123's MM rounds): `plan`'s rows re-enter SQL as a leaf,
+    * so the next round's plan starts here instead of growing ~3^rounds.
+    * The leaf is a localCheckpoint (executor-local, non-recomputable
+    * blocks); spark.graft.reliableLineageCut=true persists `.rdd` instead
+    * (full lineage, recomputable after executor loss). `eager`
+    * materializes it now, else the caller's first action does. Returns
+    * the leaf and a release closure over the leaf's OWN RDD: a
+    * checkpointed Dataset's unpersist() is a CacheManager no-op, and
+    * finding the RDD by diffing the session's persisted set could free
+    * another concurrently running query's blocks. */
+  private[graft] def lineageLeaf(plan: DataFrame, eager: Boolean): (DataFrame, () => Unit) = {
+    val spark = plan.sparkSession
+    if (confFlag(spark.conf, "spark.graft.reliableLineageCut", default = false)) {
+      val rdd = plan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      val leaf = spark.createDataFrame(rdd, plan.schema)
+      if (eager) leaf.count()
+      (leaf, () => { rdd.unpersist(blocking = false); () })
+    } else {
+      val leaf = plan.localCheckpoint(eager)
+      val own = leaf.queryExecution.logical.collectLeaves().collect { case r: LogicalRDD => r.rdd }
+      (leaf, () => own.foreach(_.unpersist(blocking = false)))
     }
   }
 

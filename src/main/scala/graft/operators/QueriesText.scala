@@ -421,7 +421,7 @@ private[operators] trait QueriesText { this: Queries.type =>
     * surface at all. Output rank mass is `pr_nano = round(p·10⁹)`
     * (= half-up pp/1000). More iterations = more of the same stage. */
   /** The corpus-dependent half of TextRank, split out for the
-    * `ScaleProbes x44_graph` leg (r12, closing the r11 verdict's
+    * `Dev probe x44_graph` leg (r12, closing the r11 verdict's
     * composition gap): ONE corpus scan → bigram groupBy → c12 ≥ 5 filter,
     * with the per-source out-weight folded in by a w1-PARTITIONED window
     * over the vocab²-bounded edge frame — no second consumer of the edge
@@ -436,7 +436,7 @@ private[operators] trait QueriesText { this: Queries.type =>
       .filter(col("c12") >= 5)
       .withColumn("ow", sum(col("c12")).over(Window.partitionBy(col("w1"))))
 
-  /** The vocab-bounded half (`ScaleProbes x44_iter`): two integer power
+  /** The vocab-bounded half (`Dev probe x44_iter`): two integer power
     * iterations + the global ranking over a given (persisted) transition
     * frame. r12 shape change vs the r7-r11 form: the rank vector and the
     * per-round contribution frame are BROADCAST under

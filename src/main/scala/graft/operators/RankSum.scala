@@ -62,7 +62,7 @@ object RankSum {
     val conf = counts0.sparkSession.conf
     val parityOpt = conf.getOption("spark.graft.ranksum.oracleParityN").map(_.toLong)
     val parityRun = parityOpt.isDefined ||
-      conf.getOption("spark.graft.verifyMode").exists(_.toBoolean)
+      Queries.confFlag(conf, "spark.graft.verifyMode", default = false)
     val parityCap = parityOpt.getOrElse(250000L)
     require(!parityRun || bigN <= parityCap,
       s"rank-sum eval slice N=$bigN exceeds the DuckDB-oracle HUGEINT headroom bound " +

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * WHY: every micro-batch pays ~6-10 checkpoint-file metadata operations
   * (offset WAL write, commit-log write, state-store delta write + the
   * listings around them). Spark's default managers route each through the
-  * Hadoop FileSystem/FileContext stack, which the qs_floor probe measured
+  * Hadoop FileSystem/FileContext stack, which per-batch progress timings measured
   * at ~25-40 ms PER OPERATION on this host even with the checkpoint on
   * tmpfs — walCommit + commitOffsets + latestOffset alone ≈ 120 ms/batch,
   * pure Hadoop bookkeeping (FS resolution, checksum wrapping, shell-less
@@ -28,8 +28,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   * SEMANTICS (mirrors FileSystemBasedCheckpointFileManager op-for-op):
   * createAtomic writes a dot-prefixed temp file in the target's directory
-  * and atomically renames on close — with overwriteIfPossible=false an
-  * existing target raises hadoop's FileAlreadyExistsException, the signal
+  * and atomically renames (or, without overwrite, hard-links) it on close
+  * — with overwriteIfPossible=false an existing target raises hadoop's
+  * FileAlreadyExistsException and is left untouched, the signal
   * HDFSMetadataLog's concurrent-writer guard catches; list on a missing
   * directory raises FileNotFoundException like FileSystem.listStatus;
   * delete is recursive and silent on missing paths; createCheckpointDirectory
@@ -130,18 +131,19 @@ private[streaming] class NioRenameOnCloseStream(out: OutputStream,
     if (!terminated) {
       terminated = true
       out.close()
-      try {
-        if (overwrite)
-          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        else
-          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          // hadoop's exception type: what HDFSMetadataLog's guard catches
-          throw new FileAlreadyExistsException(
-            s"rename destination $target already exists")
+      if (overwrite)
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      else {
+        // ATOMIC_MOVE is rename(2) on Linux, which silently replaces an
+        // existing target; link(2) fails on one instead, and is just as
+        // atomic, so a second writer of the same file loses
+        try Files.createLink(target, tmp)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            // hadoop's exception type: what HDFSMetadataLog's guard catches
+            throw new FileAlreadyExistsException(s"destination $target already exists")
+        } finally Files.deleteIfExists(tmp)
       }
       ()
     }

@@ -27,6 +27,11 @@ object MiniJson {
     def get(key: String): Option[J] = obj.get(key)
   }
 
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character escaped, so query SQL with a tab or CR still parses on
+    * the reading side. */
+  def quote(s: String): String = "\"" + esc(s) + "\""
+
   private def esc(s: String): String = s.flatMap {
     case '"'          => "\\\""
     case '\\'         => "\\\\"
@@ -38,12 +43,12 @@ object MiniJson {
   }
 
   def render(j: J): String = j match {
-    case JStr(s)     => "\"" + esc(s) + "\""
+    case JStr(s)     => quote(s)
     case JNum(n)     => n.toString
     case JBool(b)    => b.toString
     case JNull       => "null"
     case JArr(items) => items.map(render).mkString("[", ",", "]")
-    case JObj(fs)    => fs.map { case (k, v) => "\"" + esc(k) + "\":" + render(v) }.mkString("{", ",", "}")
+    case JObj(fs)    => fs.map { case (k, v) => quote(k) + ":" + render(v) }.mkString("{", ",", "}")
   }
 
   def parse(s: String): J = {

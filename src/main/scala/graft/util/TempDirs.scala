@@ -54,7 +54,7 @@ object TempDirs {
   def deleteTree(p: Path): Unit =
     try deleteRecursively(p) catch { case _: Throwable => () }
 
-  /** A `spark.local.dir` value for local-mode mains (Bench/TimeOne/probes):
+  /** A `spark.local.dir` value for the local session ([[graft.GraftSession]]):
     * shuffle and spill scratch under the same tmpfs-preferring root. Returns
     * the JVM default (java.io.tmpdir) when no tmpfs root was selected, so
     * setting it unconditionally is always safe. */

@@ -41,6 +41,25 @@ class StreamRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  test("NIO checkpoint manager: a second writer of the same batch file fails; the first file's bytes survive") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    val root = graft.util.TempDirs.create("graft-nio-ckpt")
+    val fm = new graft.streaming.NioCheckpointFileManager(
+      new Path(root.toUri), new org.apache.hadoop.conf.Configuration())
+    val batch = new Path(root.resolve("offsets/0").toUri)
+    // both writers open before either commits: the concurrent-writer race
+    // HDFSMetadataLog's guard exists for
+    val first = fm.createAtomic(batch, overwriteIfPossible = false)
+    val second = fm.createAtomic(batch, overwriteIfPossible = false)
+    first.write("first".getBytes("UTF-8"))
+    second.write("second".getBytes("UTF-8"))
+    first.close()
+    intercept[FileAlreadyExistsException](second.close())
+    assert(new String(Files.readAllBytes(root.resolve("offsets/0")), "UTF-8") === "first")
+    assert(Files.list(root.resolve("offsets")).count() === 1, "a temp file was left behind")
+    graft.util.TempDirs.deleteTree(root)
+  }
+
   test("qs12's SCD2 machine restarts from checkpoint: new wave only, emission-set equality") {
     val root = graft.util.TempDirs.create("graft-recovery")
     val srcDir = Files.createDirectories(root.resolve("waves"))

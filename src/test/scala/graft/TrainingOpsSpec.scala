@@ -2103,6 +2103,28 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.graft.reliableLineageCut")
   }
 
+  test("lineageLeaf: release frees the leaf's own RDD, not one another query persisted meanwhile") {
+    // concurrent producers share the session: another query may persist
+    // between this leaf's creation and its release
+    val sc = spark.sparkContext
+    for (reliable <- Seq(false, true)) {
+      if (reliable) spark.conf.set("spark.graft.reliableLineageCut", "true")
+      try {
+        val before = sc.getPersistentRDDs.keySet
+        val (leaf, release) = Queries.lineageLeaf(spark.range(100).toDF("id"), eager = true)
+        val own = sc.getPersistentRDDs.keySet -- before
+        val other = sc.parallelize(1 to 10).persist()
+        assert(own.size === 1, s"reliable=$reliable")
+        assert(leaf.count() === 100)
+        release()
+        val after = sc.getPersistentRDDs.keySet
+        assert(after.contains(other.id), s"reliable=$reliable: released another query's RDD")
+        assert((own & after).isEmpty, s"reliable=$reliable: the leaf's RDD is still persisted")
+        other.unpersist()
+      } finally spark.conf.unset("spark.graft.reliableLineageCut")
+    }
+  }
+
   test("x124: holdout accuracy is the exact ppm of argmax-correct test transitions") {
     val df = run("x124_markov_eval").cache()
     val rows = df.collect().toSeq

@@ -1,5 +1,6 @@
 package graft
-import graft.util.MiniJson.quote
+import graft.util.Json
+import graft.util.Json.quote
 import graft.util.Timing.{noopReps, noopRun}
 
 object Bench {
@@ -72,13 +73,11 @@ object Bench {
       if (!sys.env.get("SPARK_GRAFT_BENCH_PAIR").contains("1")) ""
       else try {
         val tmp = java.nio.file.Files.createTempFile("graft_oracle_", ".json")
-        java.nio.file.Files.writeString(tmp, SparkEntry.oracleSql
-          .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}"))
+        java.nio.file.Files.writeString(tmp, Json.render(Json.strMap(SparkEntry.oracleSql)))
         val cmd = Seq("python3", repoRoot.resolve("tools/duck_bench.py").toString,
           sfDir, tmp.toString, reps.toString)
         val oracleOut = scala.sys.process.Process(cmd).!!
-        val med = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(oracleOut).get("median_sec")
+        val med = Json.parse(oracleOut).get("median_sec")
         import scala.jdk.CollectionConverters._
         val oracleT = med.fieldNames().asScala.map(n => n -> med.get(n).asDouble).toMap
         // the pair ratio is computed over the BATCH common set: streaming

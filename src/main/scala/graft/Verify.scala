@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import graft.util.MiniJson.quote
+import graft.util.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare
   * (`tools/selfcheck.py`). Runs under the session Bench measures
@@ -28,9 +28,8 @@ object Verify {
       }
       finally spark.catalog.clearCache() // per-query persist() must not leak
     }
-    val json = SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1)))
-      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.render(Json.strMap(SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1))))))
     spark.stop()
   }
 }

@@ -47,9 +47,11 @@ final class MemoryBackend extends Backend {
   private val snapshotParts = TrieMap.empty[(Fingerprint, String), Vector[StoragePartition]]
 
   def writeGraph(name: String, fingerprint: Fingerprint): Unit = graphs(name) = fingerprint
+  private[graph] def graphFingerprint(name: String): Option[Fingerprint] = graphs.get(name)
 
   def writeSnapshot(graphName: String, id: Fingerprint): Unit =
     snapshots((graphName, id)) = System.nanoTime()
+  private[graph] def hasSnapshot(graphName: String, id: Fingerprint): Boolean = snapshots.contains((graphName, id))
 
   def tag(graphName: String, id: Fingerprint, tag: String, overwrite: Boolean): Unit = {
     val k = (graphName, tag)
@@ -63,8 +65,7 @@ final class MemoryBackend extends Backend {
   def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit =
     artifactParts.updateWith(artifactKey) { existing =>
       val cur = existing.getOrElse(Vector.empty)
-      val seen = cur.map(p => (p.path, p.key, p.inputFingerprint)).toSet
-      Some(cur ++ parts.filterNot(p => seen((p.path, p.key, p.inputFingerprint))))
+      Some(cur ++ MemoryBackend.unseen(cur, parts))
     }
 
   def readArtifactPartitions(artifactKey: String, inputFingerprints: Option[Set[Fingerprint]]): Seq[StoragePartition] = {
@@ -75,8 +76,7 @@ final class MemoryBackend extends Backend {
   def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit =
     snapshotParts.updateWith((snapshotId, artifactKey)) { existing =>
       val cur = existing.getOrElse(Vector.empty)
-      val seen = cur.map(p => (p.path, p.key, p.inputFingerprint)).toSet
-      Some(cur ++ parts.filterNot(p => seen((p.path, p.key, p.inputFingerprint))))
+      Some(cur ++ MemoryBackend.unseen(cur, parts))
     }
 
   def readSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String): Seq[StoragePartition] =
@@ -86,6 +86,8 @@ final class MemoryBackend extends Backend {
 
   def writeStatistics(artifactKey: String, partitionPath: String, s: Map[String, String]): Unit =
     stats((artifactKey, partitionPath)) = s
+  private[graph] def statistics(artifactKey: String, partitionPath: String): Option[Map[String, String]] =
+    stats.get((artifactKey, partitionPath))
 
   def readStatistics(artifactKey: String): Map[String, Map[String, String]] =
     stats.toMap.collect { case ((k, p), v) if k == artifactKey => p -> v }
@@ -95,4 +97,13 @@ final class MemoryBackend extends Backend {
   def writeGraphModel(model: GraphModel): Unit = models(model.name) = model
 
   def readGraphModel(graphName: String): Option[GraphModel] = models.get(graphName)
+}
+
+object MemoryBackend {
+  /** The dedup rule: the partitions of `parts` not already in `held` by
+    * (path, key, inputFingerprint). */
+  private[graph] def unseen(held: Seq[StoragePartition], parts: Seq[StoragePartition]): Seq[StoragePartition] = {
+    val seen = held.map(p => (p.path, p.key, p.inputFingerprint)).toSet
+    parts.filterNot(p => seen((p.path, p.key, p.inputFingerprint)))
+  }
 }

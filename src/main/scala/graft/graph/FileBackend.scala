@@ -5,12 +5,17 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.NullNode
 
 import graft.fingerprints.Fingerprint
 import graft.partitions.PartitionField
 import graft.partitions.PartitionField.{DateField, IntField, NullField}
-import graft.partitions.PartitionKey.PartitionKey
 import graft.storage.StoragePartition
+import graft.util.Json
+import graft.util.Json._
 
 /** Durable metadata backend (reference F37 — the reference ships only the
   * in-memory backend with real stores left TODO, backends/__init__.py:20-23):
@@ -29,100 +34,35 @@ final class FileBackend(dir: String) extends Backend {
   private val mem = new MemoryBackend
   private val lock = new Object
 
-  // ---- tiny JSON codec (flat string maps + typed partition fields) ----
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def jstr(s: String): String = "\"" + esc(s) + "\""
-
-  private def encodeField(f: PartitionField): String = f match {
-    case DateField(d) => s"""{"kind":"date","iso":${jstr(d.toString)}}"""
-    case IntField(v)  => s"""{"kind":"int","value":$v}"""
-    case NullField    => s"""{"kind":"null"}"""
+  // ---- record codec. The on-disk format is fixed: logs written by any
+  // earlier version must replay, so keys and nesting never change ----
+  private def encodeField(f: PartitionField): JsonNode = f match {
+    case DateField(d) => obj("kind" -> str("date"), "iso" -> str(d.toString))
+    case IntField(v)  => obj("kind" -> str("int"), "value" -> num(v))
+    case NullField    => obj("kind" -> str("null"))
   }
 
-  private def encodeKey(k: PartitionKey): String =
-    k.toSeq.sortBy(_._1).map { case (n, f) => s"${jstr(n)}:${encodeField(f)}" }.mkString("{", ",", "}")
+  private def encodePartition(p: StoragePartition): JsonNode = obj(
+    "path" -> str(p.path),
+    "key" -> obj(p.key.toSeq.sortBy(_._1).map { case (n, f) => n -> encodeField(f) }: _*),
+    "input_fp" -> num(p.inputFingerprint.key),
+    "content_fp" -> p.contentFingerprint.fold(NullNode.instance: JsonNode)(fp => num(fp.key)))
 
-  private def encodePartition(p: StoragePartition): String =
-    s"""{"path":${jstr(p.path)},"key":${encodeKey(p.key)},"input_fp":${p.inputFingerprint.key},""" +
-      s""""content_fp":${p.contentFingerprint.map(_.key.toString).getOrElse("null")}}"""
-
-  // intentionally small parser: only the JSON this class writes
-  private def parseLine(line: String): Map[String, String] = {
-    // split top-level "k":v pairs of a flat-ish object; nested objects kept raw
-    val m = scala.collection.mutable.Map.empty[String, String]
-    var i = 1 // skip '{'
-    def parseString(from: Int): (String, Int) = {
-      val sb = new StringBuilder
-      var j = from + 1
-      while (line(j) != '"') {
-        if (line(j) == '\\') {
-          line(j + 1) match {
-            case '"'  => sb.append('"'); j += 2
-            case '\\' => sb.append('\\'); j += 2
-            case 'n'  => sb.append('\n'); j += 2
-            case 'u'  => sb.append(Integer.parseInt(line.substring(j + 2, j + 6), 16).toChar); j += 6
-            case c    => sb.append(c); j += 2
-          }
-        } else { sb.append(line(j)); j += 1 }
-      }
-      (sb.toString, j + 1)
-    }
-    def parseValue(from: Int): (String, Int) = line(from) match {
-      case '"' => val (s, e) = parseString(from); (s, e)
-      case '{' =>
-        var depth = 0; var j = from
-        var inStr = false
-        while ({ val c = line(j)
-          if (inStr) { if (c == '\\') j += 1 else if (c == '"') inStr = false }
-          else if (c == '"') inStr = true
-          else if (c == '{') depth += 1
-          else if (c == '}') { depth -= 1 }
-          j += 1
-          depth > 0 }) ()
-        (line.substring(from, j), j)
-      case _ =>
-        var j = from
-        while (j < line.length && line(j) != ',' && line(j) != '}') j += 1
-        (line.substring(from, j), j)
-    }
-    while (i < line.length - 1) {
-      while (i < line.length && (line(i) == ',' || line(i) == ' ')) i += 1
-      if (i >= line.length - 1) return m.toMap
-      val (k, afterK) = parseString(i)
-      val (v, afterV) = parseValue(afterK + 1) // skip ':'
-      m(k) = v
-      i = afterV
-    }
-    m.toMap
+  private def decodeField(j: JsonNode): PartitionField = j("kind").str match {
+    case "date" => DateField(LocalDate.parse(j("iso").str))
+    case "int"  => IntField(j("value").num)
+    case "null" => NullField
+    case other  => throw new IllegalArgumentException(s"unknown partition field kind '$other'")
   }
 
-  private def decodeField(json: String): PartitionField = {
-    val m = parseLine(json)
-    m("kind") match {
-      case "date" => DateField(LocalDate.parse(m("iso")))
-      case "int"  => IntField(m("value").toLong)
-      case "null" => NullField
-    }
-  }
-
-  private def decodeKey(json: String): PartitionKey = {
-    if (json == "{}") Map.empty
-    else parseLine(json).map { case (n, f) => n -> decodeField(f) }
-  }
-
-  private def decodePartition(m: Map[String, String]): StoragePartition =
+  private def decodePartition(j: JsonNode): StoragePartition = {
+    val content = j("content_fp")
     StoragePartition(
-      path = m("path"),
-      key = decodeKey(m("key")),
-      inputFingerprint = Fingerprint(m("input_fp").toLong),
-      contentFingerprint = Option(m("content_fp")).filter(_ != "null").map(s => Fingerprint(s.toLong)))
+      path = j("path").str,
+      key = j("key").obj.map { case (n, f) => n -> decodeField(f) }.toMap,
+      inputFingerprint = Fingerprint(j("input_fp").num),
+      contentFingerprint = if (content.isNull) None else Some(Fingerprint(content.num)))
+  }
 
   // ---- persistence ----
   /** Crash recovery at open: a torn final line (append died before the
@@ -143,31 +83,26 @@ final class FileBackend(dir: String) extends Backend {
     }
   }
 
-  private def append(file: String, line: String): Unit = lock.synchronized {
-    Files.write(root.resolve(file), (line + "\n").getBytes(StandardCharsets.UTF_8),
+  /** Callers hold `lock`: check-and-append is one step, since the
+    * executor writes from many threads. */
+  private def append(file: String, record: JsonNode): Unit =
+    Files.write(root.resolve(file), (Json.render(record) + "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
-  private def readLines(file: String): Seq[String] = {
-    val p = root.resolve(file)
-    if (Files.exists(p)) Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq else Nil
-  }
 
   // replay the event logs into the in-memory projection. Only the FINAL
   // line of an append-only log can be torn by a crash mid-append, so that
-  // is the only position where a structural failure (no closing '}' or an
-  // unparseable prefix) is tolerated. Anywhere else — an interior line that
-  // doesn't parse, or any record that parses but can't apply (missing keys,
-  // bad numbers) — is real corruption and must be loud: silently dropping
-  // it would lose partition/tag metadata and break memoization.
-  private def replay(file: String)(apply: Map[String, String] => Unit): Unit = {
-    val lines = readLines(file)
+  // is the only position where a structural failure (not one complete JSON
+  // object) is tolerated. Anywhere else — an interior line that doesn't
+  // parse, or any record that parses but can't apply (missing or mistyped
+  // fields) — is real corruption and must be loud: silently dropping it
+  // would lose partition/tag metadata and break memoization.
+  private def replay(file: String)(apply: JsonNode => Unit): Unit = {
+    val p = root.resolve(file)
+    val lines = if (Files.exists(p)) Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq else Nil
     for ((l, idx) <- lines.zipWithIndex) {
-      val structural: Option[Map[String, String]] =
-        if (!l.endsWith("}")) None else scala.util.Try(parseLine(l)).toOption
-      structural match {
-        case Some(m) =>
-          scala.util.Try(apply(m)).failed.foreach { e =>
+      Try(Json.parse(l)).filter(_.isObject).toOption match {
+        case Some(r) =>
+          Try(apply(r)).failed.foreach { e =>
             throw new IllegalStateException(s"corrupt backend log $file: ${e.getMessage} in: $l", e)
           }
         case None if idx == lines.size - 1 => () // torn trailing append: skip
@@ -183,71 +118,83 @@ final class FileBackend(dir: String) extends Backend {
 
   locally {
     LogFiles.foreach(repairTail)
-    replay("graphs.jsonl")(m => mem.writeGraph(m("name"), Fingerprint(m("fp").toLong)))
-    replay("snapshots.jsonl")(m => mem.writeSnapshot(m("graph"), Fingerprint(m("id").toLong)))
-    replay("tags.jsonl")(m => mem.tag(m("graph"), Fingerprint(m("id").toLong), m("tag"), overwrite = true))
-    replay("artifact_parts.jsonl")(m =>
-      mem.writeArtifactPartitions(m("artifact"), Seq(decodePartition(parseLine(m("part"))))))
-    replay("snapshot_parts.jsonl")(m =>
-      mem.linkSnapshotPartitions(Fingerprint(m("snapshot").toLong), m("artifact"),
-        Seq(decodePartition(parseLine(m("part"))))))
-    replay("stats.jsonl")(m => mem.writeStatistics(m("artifact"), m("path"), parseLine(m("stats"))))
-    // model payloads are full JSON (arrays etc.) beyond the tiny flat
-    // parser, so they ride as ONE escaped string value per record and
-    // decode with the real ModelCodec parser; last write per graph wins
-    replay("models.jsonl")(m => mem.writeGraphModel(ModelCodec.decode(m("model"))))
+    replay("graphs.jsonl")(r => mem.writeGraph(r("name").str, Fingerprint(r("fp").num)))
+    replay("snapshots.jsonl")(r => mem.writeSnapshot(r("graph").str, Fingerprint(r("id").num)))
+    replay("tags.jsonl")(r => mem.tag(r("graph").str, Fingerprint(r("id").num), r("tag").str, overwrite = true))
+    replay("artifact_parts.jsonl")(r =>
+      mem.writeArtifactPartitions(r("artifact").str, Seq(decodePartition(r("part")))))
+    replay("snapshot_parts.jsonl")(r =>
+      mem.linkSnapshotPartitions(Fingerprint(r("snapshot").num), r("artifact").str, Seq(decodePartition(r("part")))))
+    replay("stats.jsonl")(r => mem.writeStatistics(r("artifact").str, r("path").str, r("stats").strMap))
+    // a model rides as ONE string field per record (the log's format
+    // since models were first persisted); last write per graph wins
+    replay("models.jsonl")(r => mem.writeGraphModel(ModelCodec.decode(r("model").str)))
   }
 
-  // ---- Backend contract: write-through to log + memory projection ----
-  def writeGraph(name: String, fingerprint: Fingerprint): Unit = {
-    append("graphs.jsonl", s"""{"name":${jstr(name)},"fp":${fingerprint.key}}""")
-    mem.writeGraph(name, fingerprint)
+  // ---- Backend contract: write-through to log + memory projection. A
+  // record is appended only if it changes the projection, so a no-op
+  // rebuild leaves the log as it was. ----
+  def writeGraph(name: String, fingerprint: Fingerprint): Unit = lock.synchronized {
+    if (!mem.graphFingerprint(name).contains(fingerprint)) {
+      append("graphs.jsonl", obj("name" -> str(name), "fp" -> num(fingerprint.key)))
+      mem.writeGraph(name, fingerprint)
+    }
   }
 
-  def writeSnapshot(graphName: String, id: Fingerprint): Unit = {
-    append("snapshots.jsonl", s"""{"graph":${jstr(graphName)},"id":${id.key}}""")
-    mem.writeSnapshot(graphName, id)
+  def writeSnapshot(graphName: String, id: Fingerprint): Unit = lock.synchronized {
+    if (!mem.hasSnapshot(graphName, id)) {
+      append("snapshots.jsonl", obj("graph" -> str(graphName), "id" -> num(id.key)))
+      mem.writeSnapshot(graphName, id)
+    }
   }
 
-  def tag(graphName: String, id: Fingerprint, tag: String, overwrite: Boolean): Unit = {
+  def tag(graphName: String, id: Fingerprint, tag: String, overwrite: Boolean): Unit = lock.synchronized {
+    val held = mem.snapshotForTag(graphName, tag)
     mem.tag(graphName, id, tag, overwrite) // throws on conflict BEFORE logging
-    append("tags.jsonl", s"""{"graph":${jstr(graphName)},"tag":${jstr(tag)},"id":${id.key}}""")
+    if (!held.contains(id))
+      append("tags.jsonl", obj("graph" -> str(graphName), "tag" -> str(tag), "id" -> num(id.key)))
   }
 
   def snapshotForTag(graphName: String, tag: String): Option[Fingerprint] =
     mem.snapshotForTag(graphName, tag)
 
-  def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit = {
-    parts.foreach(p =>
-      append("artifact_parts.jsonl", s"""{"artifact":${jstr(artifactKey)},"part":${encodePartition(p)}}"""))
-    mem.writeArtifactPartitions(artifactKey, parts)
+  def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit = lock.synchronized {
+    val fresh = MemoryBackend.unseen(mem.readArtifactPartitions(artifactKey, None), parts)
+    fresh.foreach(p =>
+      append("artifact_parts.jsonl", obj("artifact" -> str(artifactKey), "part" -> encodePartition(p))))
+    mem.writeArtifactPartitions(artifactKey, fresh)
   }
 
   def readArtifactPartitions(artifactKey: String, inputFingerprints: Option[Set[Fingerprint]]): Seq[StoragePartition] =
     mem.readArtifactPartitions(artifactKey, inputFingerprints)
 
-  def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit = {
-    parts.foreach(p =>
-      append("snapshot_parts.jsonl",
-        s"""{"snapshot":${snapshotId.key},"artifact":${jstr(artifactKey)},"part":${encodePartition(p)}}"""))
-    mem.linkSnapshotPartitions(snapshotId, artifactKey, parts)
-  }
+  def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit =
+    lock.synchronized {
+      val fresh = MemoryBackend.unseen(mem.readSnapshotPartitions(snapshotId, artifactKey), parts)
+      fresh.foreach(p => append("snapshot_parts.jsonl",
+        obj("snapshot" -> num(snapshotId.key), "artifact" -> str(artifactKey), "part" -> encodePartition(p))))
+      mem.linkSnapshotPartitions(snapshotId, artifactKey, fresh)
+    }
 
   def readSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String): Seq[StoragePartition] =
     mem.readSnapshotPartitions(snapshotId, artifactKey)
 
-  def writeStatistics(artifactKey: String, partitionPath: String, stats: Map[String, String]): Unit = {
-    val enc = stats.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    append("stats.jsonl", s"""{"artifact":${jstr(artifactKey)},"path":${jstr(partitionPath)},"stats":$enc}""")
-    mem.writeStatistics(artifactKey, partitionPath, stats)
-  }
+  def writeStatistics(artifactKey: String, partitionPath: String, stats: Map[String, String]): Unit =
+    lock.synchronized {
+      if (!mem.statistics(artifactKey, partitionPath).contains(stats)) {
+        append("stats.jsonl", obj("artifact" -> str(artifactKey), "path" -> str(partitionPath), "stats" -> strMap(stats)))
+        mem.writeStatistics(artifactKey, partitionPath, stats)
+      }
+    }
 
   def readStatistics(artifactKey: String): Map[String, Map[String, String]] =
     mem.readStatistics(artifactKey)
 
-  def writeGraphModel(model: GraphModel): Unit = {
-    append("models.jsonl", s"""{"graph":${jstr(model.name)},"model":${jstr(ModelCodec.encode(model))}}""")
-    mem.writeGraphModel(model)
+  def writeGraphModel(model: GraphModel): Unit = lock.synchronized {
+    if (!mem.readGraphModel(model.name).contains(model)) {
+      append("models.jsonl", obj("graph" -> str(model.name), "model" -> str(ModelCodec.encode(model))))
+      mem.writeGraphModel(model)
+    }
   }
 
   def readGraphModel(graphName: String): Option[GraphModel] = mem.readGraphModel(graphName)

@@ -58,9 +58,10 @@ object Artifact {
   /** `Artifact.cast` with TYPE INFERENCE from the value (the reference
     * infers via the python TypeSystem, artifacts/__init__.py:80-116 —
     * int → Int64 etc.): `of(6L)` declares an AInt64 literal readable as a
-    * one-row frame with column `value` (and via `readScalar`). */
+    * one-row frame with column `value` (and via `readScalar`). The
+    * payload is the value's `Canonical` JSON, whose bytes never change. */
   def of(value: Any): Artifact =
-    literal(inferType(value), s"""{"value":${encodeJsonValue(value)}}""")
+    literal(inferType(value), s"""{"value":${Canonical.encode(value)}}""")
 
   private[graft] def inferType(v: Any): ArtiType = v match {
     case _: Boolean                 => ArtiType.ABoolean()
@@ -72,20 +73,6 @@ object Artifact {
     case s: Seq[_] if s.nonEmpty    => ArtiType.AList(inferType(s.head))
     case other => throw new IllegalArgumentException(
       s"cannot infer an ArtiType from value '$other' (${other.getClass.getName}) — declare it with Artifact.literal")
-  }
-
-  private def encodeJsonValue(v: Any): String = v match {
-    case s: String => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    case d: java.time.LocalDate     => "\"" + d.toString + "\""
-    case t: java.time.LocalDateTime => "\"" + t.toString + "\""
-    case s: Seq[_]                  => s.map(encodeJsonValue).mkString("[", ",", "]")
-    case other                      => String.valueOf(other)
   }
 }
 
@@ -297,9 +284,9 @@ final class Graph(val name: String) {
 
   /** Convenience mirroring the reference's `Graph.build()`
     * (graphs/__init__.py:147-162): snapshot, then execute incrementally. */
-  def build(spark: SparkSession, backend: Backend, parallelism: Int = 4): (GraphSnapshot, graft.exec.BuildReport) = {
+  def build(spark: SparkSession, backend: Backend): (GraphSnapshot, graft.exec.BuildReport) = {
     val snap = snapshot(spark, backend)
-    (snap, new graft.exec.LocalExecutor(backend, parallelism).build(spark, snap))
+    (snap, new graft.exec.LocalExecutor(backend).build(spark, snap))
   }
 
   /** Snapshot: content-address the graph + all raw inputs

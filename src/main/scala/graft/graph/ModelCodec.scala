@@ -1,10 +1,12 @@
 package graft.graph
 
+import com.fasterxml.jackson.databind.JsonNode
+
 import graft.io.Format
 import graft.storage.{FileStorage, LiteralStorage, PathTemplate, Storage}
 import graft.types.SparkTypeSystem
-import graft.util.MiniJson
-import graft.util.MiniJson._
+import graft.util.Json
+import graft.util.Json._
 
 /** The persistable shape of a graph (F37 model read-back — reference:
   * src/arti/backends/__init__.py:59-81 `read_graph`/`read_snapshot` return
@@ -39,22 +41,22 @@ object GraphModel {
   * (SparkTypeSystem.typeToJson); storages encode by kind. */
 object ModelCodec {
 
-  def encode(m: GraphModel): String = MiniJson.render(JObj.of(
-    "name" -> JStr(m.name),
-    "artifacts" -> JArr(m.artifacts.map { case (k, a) => JObj.of(
-      "key" -> JStr(k),
-      "atype" -> JStr(SparkTypeSystem.typeToJson(a.atype)),
-      "format" -> JStr(a.format.name),
+  def encode(m: GraphModel): String = Json.render(obj(
+    "name" -> str(m.name),
+    "artifacts" -> arr(m.artifacts.map { case (k, a) => obj(
+      "key" -> str(k),
+      "atype" -> str(SparkTypeSystem.typeToJson(a.atype)),
+      "format" -> str(a.format.name),
       "storage" -> encodeStorage(a.storage),
-      "annotations" -> JObj(a.annotations.toSeq.sortBy(_._1).map { case (ak, av) => ak -> JStr(av) }))
+      "annotations" -> strMap(a.annotations))
     }),
-    "wiring" -> JArr(m.wiring.map(w => JObj.of(
-      "producer" -> JStr(w.producerName),
-      "inputs" -> JArr(w.inputKeys.map(JStr)),
-      "outputs" -> JArr(w.outputKeys.map(JStr)))))))
+    "wiring" -> arr(m.wiring.map(w => obj(
+      "producer" -> str(w.producerName),
+      "inputs" -> arr(w.inputKeys.map(str)),
+      "outputs" -> arr(w.outputKeys.map(str)))))))
 
   def decode(json: String): GraphModel = {
-    val j = MiniJson.parse(json)
+    val j = Json.parse(json)
     GraphModel(
       name = j("name").str,
       artifacts = j("artifacts").arr.map { a =>
@@ -62,7 +64,7 @@ object ModelCodec {
           atype = SparkTypeSystem.typeFromJson(a("atype").str),
           format = formatOf(a("format").str),
           storage = decodeStorage(a("storage")),
-          annotations = a("annotations").obj.map { case (k, v) => k -> v.str })
+          annotations = a("annotations").strMap)
       },
       wiring = j("wiring").arr.map(w => ProducerWiring(
         w("producer").str,
@@ -81,9 +83,9 @@ object ModelCodec {
     * subclass becomes model-persistable by registering a codec under a
     * unique kind. */
   private val storageCodecs =
-    scala.collection.concurrent.TrieMap.empty[String, (PartialFunction[Storage, J], J => Storage)]
+    scala.collection.concurrent.TrieMap.empty[String, (PartialFunction[Storage, JsonNode], JsonNode => Storage)]
 
-  def registerStorage(kind: String, enc: PartialFunction[Storage, J], dec: J => Storage): Unit = {
+  def registerStorage(kind: String, enc: PartialFunction[Storage, JsonNode], dec: JsonNode => Storage): Unit = {
     require(kind != "file" && kind != "literal", s"storage kind '$kind' is built-in")
     storageCodecs.put(kind, (enc, dec))
   }
@@ -91,7 +93,7 @@ object ModelCodec {
   /** The single storage-codec dispatch both [[canEncode]] and
     * [[encodeStorage]] share — built-ins, then the registry — so the two
     * can never drift apart. */
-  private def customCodecFor(s: Storage): Option[(String, (PartialFunction[Storage, J], J => Storage))] =
+  private def customCodecFor(s: Storage): Option[(String, (PartialFunction[Storage, JsonNode], JsonNode => Storage))] =
     storageCodecs.find(_._2._1.isDefinedAt(s))
 
   private def isBuiltin(s: Storage): Boolean = s match {
@@ -103,23 +105,22 @@ object ModelCodec {
   def canEncode(m: GraphModel): Boolean =
     m.artifacts.forall { case (_, a) => isBuiltin(a.storage) || customCodecFor(a.storage).isDefined }
 
-  private def encodeStorage(s: Storage): J = s match {
-    case FileStorage(t) => JObj.of(
-      "kind" -> JStr("file"),
-      "template" -> JStr(t.template),
-      "field_kinds" -> JObj(t.fieldKinds.toSeq.sortBy(_._1).map { case (k, v) => k -> JStr(v) }))
-    case LiteralStorage(json) => JObj.of("kind" -> JStr("literal"), "json" -> JStr(json))
+  private def encodeStorage(s: Storage): JsonNode = s match {
+    case FileStorage(t) => obj(
+      "kind" -> str("file"),
+      "template" -> str(t.template),
+      "field_kinds" -> strMap(t.fieldKinds))
+    case LiteralStorage(json) => obj("kind" -> str("literal"), "json" -> str(json))
     case other =>
       customCodecFor(other).map { case (kind, (enc, _)) =>
-        JObj.of("kind" -> JStr(kind), "payload" -> enc(other))
+        obj("kind" -> str(kind), "payload" -> enc(other))
       }.getOrElse(throw new UnsupportedStorage(
         s"storage ${other.getClass.getName} has no model codec — register one via " +
           "ModelCodec.registerStorage to make it backend-persistable"))
   }
 
-  private def decodeStorage(j: J): Storage = j("kind").str match {
-    case "file" =>
-      FileStorage(PathTemplate(j("template").str, j("field_kinds").obj.map { case (k, v) => k -> v.str }))
+  private def decodeStorage(j: JsonNode): Storage = j("kind").str match {
+    case "file" => FileStorage(PathTemplate(j("template").str, j("field_kinds").strMap))
     case "literal" => LiteralStorage(j("json").str)
     case other =>
       storageCodecs.get(other).map(_._2(j("payload")))

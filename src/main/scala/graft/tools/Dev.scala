@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.FormattedMode
 
 import graft.GraftSession
 import graft.operators.Queries
-import graft.util.MiniJson.quote
+import graft.util.Json.quote
 import graft.util.Timing.{noopReps, noopRun}
 
 /** The dev CLI: every subcommand runs on the session Bench and Verify use

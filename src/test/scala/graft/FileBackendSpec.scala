@@ -1,6 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -9,11 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.exec.LocalExecutor
 import graft.fingerprints.Fingerprint
-import graft.graph.{Artifact, FileBackend, Graph, Producer}
+import graft.graph.{Artifact, FileBackend, Graph, GraphModel, Producer, ProducerWiring}
 import graft.io.Format
-import graft.partitions.PartitionField.{DateField, IntField}
-import graft.storage.{FileStorage, PathTemplate, StoragePartition}
+import graft.partitions.PartitionField.{DateField, IntField, NullField}
+import graft.storage.{FileStorage, LiteralStorage, PathTemplate, StoragePartition}
 import graft.types.ArtiType._
+import graft.util.Json
 
 /** Durable backend: the metadata contract round-trips through the JSONL
   * event log, and — the property that matters — skip-if-built memoization
@@ -202,5 +208,126 @@ class FileBackendSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.writeString(dir2.resolve("graphs.jsonl"),
       "garbage-not-json", java.nio.file.StandardOpenOption.APPEND)
     new FileBackend(dir2.toString) // must construct
+  }
+
+  test("a complete record with a missing or mistyped field fails loudly") {
+    // Jackson's lenient readers would answer "" or 0 here; replay must not
+    for (bad <- Seq("""{"fp":"abc"}""", """{"name":"g","fp":"abc"}""", """{"name":7,"fp":1}""",
+        """{"name":"g","fp":1.5}""", """{"name":"g","fp":123456789012345678901234}"""))
+      withClue(bad) {
+        val dir = Files.createTempDirectory("graft-fb12")
+        Files.writeString(dir.resolve("graphs.jsonl"), bad + "\n")
+        val e = intercept[IllegalStateException] { new FileBackend(dir.toString) }
+        assert(e.getMessage.contains("corrupt backend log graphs.jsonl"))
+      }
+  }
+
+  private val logFiles = Seq("graphs.jsonl", "snapshots.jsonl", "tags.jsonl",
+    "artifact_parts.jsonl", "snapshot_parts.jsonl", "stats.jsonl", "models.jsonl")
+
+  private def logSizes(dir: Path): Map[String, Long] =
+    logFiles.map(dir.resolve).filter(Files.exists(_)).map(f => f.getFileName.toString -> Files.size(f)).toMap
+
+  test("a no-op rebuild appends nothing; a reopen replays the same state") {
+    val base = Files.createTempDirectory("graft-fb9")
+    Files.createDirectories(base.resolve("tx"))
+    for (d <- Seq("1970-01-01", "1970-01-02"))
+      Files.writeString(base.resolve("tx").resolve(s"$d.json"), s"""{"id": 1, "date": "$d", "amount": 42.0}""")
+    val txType = ACollection("transactions",
+      AStruct("tx", Seq("id" -> AInt64(), "date" -> ADate(), "amount" -> AFloat64())),
+      partitionBy = Seq("date"))
+    val dailyType = ACollection("daily",
+      AStruct("d", Seq("date" -> ADate(), "amount" -> AFloat64())), partitionBy = Seq("date"))
+    val g = new Graph("noop")
+      .add("tx", Artifact(txType, Format.Json,
+        FileStorage(PathTemplate(s"$base/tx/{date.iso}.json", Map("date" -> "date")))))
+      .add("daily", Artifact(dailyType, Format.Json,
+        FileStorage(PathTemplate(s"$base/daily/{date.iso}/{input_fingerprint}", Map("date" -> "date")))))
+      .produce(Producer("d", build = (_, ins) => Seq(ins.head.select("date", "amount").coalesce(1)),
+        map = Producer.mapByKey, computeStatistics = true), Seq("tx"), Seq("daily"))
+      .close()
+    val meta = base.resolve("meta")
+    val b = new FileBackend(meta.toString)
+    val (snap, r1) = g.build(spark, b)
+    assert(r1.totalBuilt === 2)
+    snap.tag(b, "v1")
+    val before = logSizes(meta)
+    assert(before.keySet === logFiles.toSet)
+
+    val snap2 = g.snapshot(spark, b)
+    assert(snap2.id === snap.id)
+    assert(new LocalExecutor(b).build(spark, snap2).totalBuilt === 0)
+    snap2.tag(b, "v1")
+    assert(logSizes(meta) === before, "a no-op rebuild must not grow the log")
+
+    val reopened = new FileBackend(meta.toString)
+    for (k <- Seq("noop/tx", "noop/daily")) {
+      assert(reopened.readArtifactPartitions(k) === b.readArtifactPartitions(k))
+      assert(reopened.readSnapshotPartitions(snap.id, k) === b.readSnapshotPartitions(snap.id, k))
+      assert(reopened.readStatistics(k) === b.readStatistics(k))
+    }
+    assert(reopened.readArtifactPartitions("noop/daily").size === 2)
+    assert(reopened.readStatistics("noop/daily").size === 2)
+    assert(reopened.snapshotForTag("noop", "v1") === Some(snap.id))
+    assert(reopened.readGraphModel("noop") === b.readGraphModel("noop"))
+  }
+
+  // The records below were written by the hand-rolled JSON codec that
+  // FileBackend used before it moved to Jackson; the files under
+  // src/test/resources/graft/filebackend-format are that codec's bytes.
+  private val weird = "/data/we\"ird\\back\nnew\ttab\rcr\u0001ctl/ünïcødé-文字-😀"
+  private val p1 = StoragePartition(weird,
+    Map("d" -> DateField(java.time.LocalDate.of(2024, 2, 29)), "y" -> IntField(-7), "n" -> NullField),
+    Fingerprint(-987654321L), Some(Fingerprint(Long.MinValue)))
+  private val p2 = StoragePartition("/data/plain", Map.empty, Fingerprint(5L), None)
+  private val stats = Map("rows" -> "5", "we\"ird\u0001key" -> "x\ny\r\tz-ü")
+  private val model = GraphModel("g\"1",
+    Seq(
+      "file" -> Artifact(
+        ACollection("rows", AStruct("r", Seq("id" -> AInt64(), "d" -> ADate())), partitionBy = Seq("d")),
+        Format.Parquet, FileStorage(PathTemplate("/out/{d.iso}/{input_fingerprint}", Map("d" -> "date"))),
+        annotations = Map("owner" -> "spec", "note" -> "tab\there \"q\" ü\u0001")),
+      "lit" -> Artifact(AString(), Format.Json, LiteralStorage("{\"value\":\"li\\\"t\\nv\\u0001ü\"}"),
+        annotations = Map("k" -> "v"))),
+    Seq(ProducerWiring("p\"1", Seq("lit"), Seq("file"))))
+
+  private def writeFixture(b: FileBackend): Unit = {
+    b.writeGraph("g\"1", Fingerprint(1L))
+    b.writeSnapshot("g\"1", Fingerprint(-2L))
+    b.tag("g\"1", Fingerprint(-2L), "reléase\t1", overwrite = false)
+    b.writeArtifactPartitions("g\"1/a", Seq(p1, p2))
+    b.linkSnapshotPartitions(Fingerprint(-2L), "g\"1/a", Seq(p1, p2))
+    b.writeStatistics("g\"1/a", weird, stats)
+    b.writeGraphModel(model)
+  }
+
+  /** A log's records as trees, the model string field parsed as well. */
+  private def records(dir: Path, file: String): Seq[JsonNode] =
+    Files.readAllLines(dir.resolve(file)).asScala.toSeq.map { l =>
+      val r = Json.parse(l).asInstanceOf[ObjectNode]
+      if (r.has("model")) r.set[JsonNode]("model", Json.parse(r.get("model").textValue)) else r
+    }
+
+  test("format compatibility: the earlier codec's log replays to the state it recorded") {
+    val dir = Files.createTempDirectory("graft-fb10")
+    for (f <- logFiles) {
+      val in = getClass.getClassLoader.getResourceAsStream(s"graft/filebackend-format/$f")
+      try Files.copy(in, dir.resolve(f)) finally in.close()
+    }
+    val b = new FileBackend(dir.toString)
+    assert(b.snapshotForTag("g\"1", "reléase\t1") === Some(Fingerprint(-2L)))
+    assert(b.readArtifactPartitions("g\"1/a") === Seq(p1, p2))
+    assert(b.readSnapshotPartitions(Fingerprint(-2L), "g\"1/a") === Seq(p1, p2))
+    assert(b.readStatistics("g\"1/a") === Map(weird -> stats))
+    assert(b.readGraphModel("g\"1") === Some(model))
+    // the replayed state already holds every recorded write (graph and
+    // snapshot records included), so writing them again appends nothing
+    val sizes = logSizes(dir)
+    writeFixture(b)
+    assert(logSizes(dir) === sizes)
+    // and the same writes into an empty directory give the same records
+    val fresh = Files.createTempDirectory("graft-fb11")
+    writeFixture(new FileBackend(fresh.toString))
+    for (f <- logFiles) assert(records(fresh, f) === records(dir, f), f)
   }
 }

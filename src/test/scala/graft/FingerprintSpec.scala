@@ -74,4 +74,17 @@ class FingerprintSpec extends AnyFunSuite {
     assert(a.fingerprint.key === 551214474025170896L)
     assert(Canonical.fingerprint(("v", 1, Seq(1L, 2L))).key === 4958105272591892815L)
   }
+
+  test("literal-artifact fingerprints are pinned (Artifact.of's JSON payload bytes)") {
+    // values taken from the engine before Artifact.of shared Canonical's
+    // string escaper: a payload byte change would rebuild every consumer
+    import java.time.{LocalDate, LocalDateTime}
+    import graft.graph.Artifact
+    assert(Artifact.of("q\"uote\nnl\ttab\u0001ctl").fingerprint.key === -8178161069424950408L)
+    assert(Artifact.of(3.25d).fingerprint.key === 5224087575888618827L)
+    assert(Artifact.of(LocalDate.of(2024, 2, 29)).fingerprint.key === 5044493531840473466L)
+    assert(Artifact.of(LocalDateTime.of(2024, 2, 29, 13, 45, 7, 123000000)).fingerprint.key ===
+      4696546445251720284L)
+    assert(Artifact.of(Seq(1L, -2L, 3L)).fingerprint.key === -1592080336272729268L)
+  }
 }

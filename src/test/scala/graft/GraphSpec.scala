@@ -338,13 +338,13 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(snap.rawPartitions("tx").size === 2)
     assert(backend.readGraphModel("custom-store").isEmpty)
     // registering a codec makes the same graph model-persistable
-    import graft.util.MiniJson._
+    import graft.util.Json._
     graft.graph.ModelCodec.registerStorage("spec-storage",
-      { case SpecStorage(i) => JObj.of(
-          "template" -> JStr(i.template.template),
-          "field_kinds" -> JObj(i.template.fieldKinds.toSeq.sortBy(_._1).map { case (k, v) => k -> JStr(v) })) },
-      j => SpecStorage(FileStorage(PathTemplate(j("template").str,
-        j("field_kinds").obj.map { case (k, v) => k -> v.str }))))
+      { case SpecStorage(i) => obj(
+          "template" -> str(i.template.template),
+          "field_kinds" -> strMap(i.template.fieldKinds)) },
+      (j: com.fasterxml.jackson.databind.JsonNode) =>
+        SpecStorage(FileStorage(PathTemplate(j("template").str, j("field_kinds").strMap))))
     g.snapshot(spark, backend)
     val model = backend.readGraphModel("custom-store")
     assert(model.nonEmpty)

@@ -4,17 +4,18 @@ import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fingerprints.{Canonical, Fingerprint}
+import graft.graph.{Artifact, FileBackend, GraphModel, ModelCodec, ProducerWiring}
+import graft.io.Format
 import graft.partitions.PartitionField.{DateField, IntField}
-import graft.storage.PathTemplate
+import graft.storage.{FileStorage, LiteralStorage, PathTemplate, StoragePartition}
 import graft.types.{ArtiType, SparkTypeSystem => S}
 import graft.types.ArtiType._
-import graft.util.MiniJson
-import graft.util.MiniJson._
 
 /** Property-based invariants for the algebraic cores: fingerprint XOR
-  * algebra, render∘parse identity for path templates, and the two
-  * persistence codecs (MiniJson, ArtiType). These are the laws everything
-  * else leans on — memoization, partition discovery, model read-back. */
+  * algebra, render∘parse identity for path templates, and the persistence
+  * codecs (backend records, graph models, ArtiType). These are the laws
+  * everything else leans on — memoization, partition discovery, model
+  * read-back. */
 class PropertiesSpec extends AnyFunSuite {
 
   private def check(name: String, p: Prop): Unit = {
@@ -74,24 +75,42 @@ class PropertiesSpec extends AnyFunSuite {
       })
   }
 
-  // ------------------------------------------------------------ MiniJson
-  private lazy val genJson: Gen[J] = Gen.sized { size =>
-    val scalar = Gen.oneOf(
-      Arbitrary.arbitrary[String].map(JStr.apply),
-      Arbitrary.arbitrary[Long].map(JNum.apply),
-      Arbitrary.arbitrary[Boolean].map(JBool.apply),
-      Gen.const(JNull: J))
-    if (size <= 1) scalar
-    else Gen.oneOf(
-      scalar,
-      Gen.resize(size / 2, Gen.listOfN(3, genJson)).map(xs => JArr(xs): J),
-      Gen.resize(size / 2, Gen.listOfN(3, Gen.zip(Arbitrary.arbitrary[String], genJson)))
-        .map(fs => JObj(fs.distinctBy(_._1)): J))
+  // ------------------------------------------- metadata JSON codec
+  /** Arbitrary valid Unicode text: control characters, JSON's quote and
+    * backslash, BMP text and supplementary code points (surrogate pairs).
+    * Lone surrogates are left out: a UTF-8 file cannot hold them. */
+  private val genText: Gen[String] = Gen.listOf(Gen.frequency(
+      3 -> Gen.choose(0, 0x1f),
+      2 -> Gen.oneOf('"'.toInt, '\\'.toInt, '/'.toInt, 0x7f),
+      3 -> Gen.choose(0x20, 0x7e),
+      2 -> Gen.choose(0xa0, 0xd7ff),
+      1 -> Gen.choose(0xe000, 0xfffd),
+      2 -> Gen.choose(0x10000, 0x10ffff)))
+    .map(cps => new String(cps.toArray, 0, cps.size))
+
+  test("FileBackend: arbitrary strings survive write -> reopen") {
+    check("filebackend-strings", Prop.forAll(genText, genText) { (a, b) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-prop-fb").toString
+      val part = StoragePartition(a, Map(b -> IntField(1)), Fingerprint(3L), None)
+      val w = new FileBackend(dir)
+      w.writeGraph(a, Fingerprint(1L))
+      w.tag(a, Fingerprint(2L), b, overwrite = false)
+      w.writeArtifactPartitions(b, Seq(part))
+      w.writeStatistics(b, a, Map(a -> b))
+      val r = new FileBackend(dir)
+      r.snapshotForTag(a, b) == Some(Fingerprint(2L)) &&
+        r.readArtifactPartitions(b) == Seq(part) &&
+        r.readStatistics(b) == Map(a -> Map(a -> b))
+    })
   }
 
-  test("MiniJson: parse(render(j)) == j for arbitrary trees (incl. control chars)") {
-    check("minijson-roundtrip", Prop.forAll(genJson) { j =>
-      MiniJson.parse(MiniJson.render(j)) == j
+  test("ModelCodec: decode(encode(m)) == m for arbitrary keys, annotations and templates") {
+    check("modelcodec-strings", Prop.forAll(genText, genText) { (a, b) =>
+      val m = GraphModel(a,
+        Seq(a -> Artifact(AInt64(), Format.Json, FileStorage(PathTemplate(b, Map(a -> "date"))), Map(a -> b)),
+          b -> Artifact(AString(), Format.Json, LiteralStorage(a), Map(b -> a))),
+        Seq(ProducerWiring(b, Seq(a), Seq(b))))
+      ModelCodec.decode(ModelCodec.encode(m)) == m
     })
   }
 
